@@ -9,7 +9,8 @@ Single declarative DataFrame chain (north_star, BASELINE.json):
       → reason cascade → keep/drop         [Alpaca utils:135-161 pattern]
       → PII/toxicity scrub                 [native regexp_replace chain]
       → window over (conv_id, turn_idx)    [stable turn ordering: turn_rank]
-      → outputs: filtered table, drop-reason metrics, per-partition lineage
+      → outputs: decisions (the one pass), then filtered table, drop-reason
+        metrics, per-partition lineage, rule matrix derived from it
 
 Scale notes (the 100 TB story):
 - Every per-turn step is narrow — no shuffle at all until the optional
@@ -199,46 +200,85 @@ def run_pipeline(
     langid_mode: str = "native",
     cluster_output: list[str] | None = None,
 ) -> dict[str, DataFrame]:
-    """Run the full pipeline; optionally write the three output tables.
+    """Run the full pipeline; optionally write the five output tables.
 
-    Outputs: ``filtered`` (kept turns, scrubbed), ``decisions`` (every turn
-    with keep/drop + reason), ``metrics`` (drop-reason counts), ``lineage``
-    (per-partition row accounting). ``cluster_output`` range-clusters the
+    Outputs: ``decisions`` (every turn with keep/drop + reason),
+    ``filtered`` (kept turns, scrubbed), ``metrics`` (drop-reason counts),
+    ``lineage`` (per-partition row accounting) and ``rule_matrix``
+    (per-rule ablation counts). ``cluster_output`` range-clusters the
     ``filtered`` table on those columns at write time
     (:func:`~open_thoughts_spark.sources.sinks.write_clustered_table`), so
     downstream readers of the curated corpus get min/max file skipping on
     the cluster key (e.g. ``conv_id``).
+
+    Without ``output_dir`` the tables are returned as lazy frames over one
+    cascade. With it the cascade runs exactly once, in the ``decisions``
+    write: the rule counters are observed on that write
+    (``DataFrame.observe``), ``filtered``, ``metrics`` and ``lineage`` are
+    derived from the written decisions, and the returned frames read the
+    written tables. ``lineage.partition_id`` is the part number of the
+    decisions file — the id of the cascade partition that wrote it, the
+    ``spark_partition_id()`` that :func:`partition_lineage` groups by.
     """
+    from pyspark.sql import Observation
+
     from open_thoughts_spark.pipeline.metrics import (
         drop_reason_metrics,
+        part_number,
         partition_lineage,
+        row_accounting,
+        rule_hit_counters,
         rule_hit_matrix,
+        rule_hit_rows,
+        rule_names,
     )
+
+    def kept(decisions: DataFrame) -> DataFrame:
+        return decisions.filter(F.col("keep")).drop("keep", "drop_reason")
 
     df = read_transcripts(spark, input_path)
     decided = quality_filter(df, langid_mode=langid_mode)
     decisions = decided.select(*RESULT_COLUMNS)
-    filtered = decisions.filter(F.col("keep")).drop("keep", "drop_reason")
-    metrics = drop_reason_metrics(decided)
-    lineage = partition_lineage(decided)
-    result = {
-        "decisions": decisions,
-        "filtered": filtered,
-        "metrics": metrics,
-        "lineage": lineage,
-        "rule_matrix": rule_hit_matrix(decided),
+    if not output_dir:
+        return {
+            "decisions": decisions,
+            "filtered": kept(decisions),
+            "metrics": drop_reason_metrics(decided),
+            "lineage": partition_lineage(decided),
+            "rule_matrix": rule_hit_matrix(decided),
+        }
+
+    def read_back(name: str, like: DataFrame) -> DataFrame:
+        # the schema is known: no inference job per read
+        return spark.read.schema(like.schema).parquet(f"{output_dir}/{name}")
+
+    rules = rule_names(decided)
+    observed = Observation("rule_hits")
+    decided.observe(observed, *rule_hit_counters(rules)).select(
+        *RESULT_COLUMNS
+    ).write.mode("overwrite").parquet(f"{output_dir}/decisions")
+
+    # everything below reads the written decisions; no UDF runs again
+    written = read_back("decisions", decisions)
+    # the observed row as a one-partition frame: rule_matrix stays one file
+    counters = spark.range(1, numPartitions=1).selectExpr(
+        *(f"cast({'null' if v is None else v} as bigint) as {k}"
+          for k, v in observed.get.items())
+    )
+    derived = {
+        "filtered": kept(written),
+        "metrics": drop_reason_metrics(written),
+        "lineage": row_accounting(written, part_number()),
+        "rule_matrix": rule_hit_rows(counters, rules),
     }
-    if output_dir:
-        decisions.write.mode("overwrite").parquet(f"{output_dir}/decisions")
-        if cluster_output:
+    for name, frame in derived.items():
+        if name == "filtered" and cluster_output:
             from open_thoughts_spark.sources.sinks import write_clustered_table
 
-            write_clustered_table(filtered, f"{output_dir}/filtered", cluster_output)
+            write_clustered_table(frame, f"{output_dir}/{name}", cluster_output)
         else:
-            filtered.write.mode("overwrite").parquet(f"{output_dir}/filtered")
-        metrics.write.mode("overwrite").parquet(f"{output_dir}/metrics")
-        lineage.write.mode("overwrite").parquet(f"{output_dir}/lineage")
-        result["rule_matrix"].write.mode("overwrite").parquet(
-            f"{output_dir}/rule_matrix"
-        )
-    return result
+            frame.write.mode("overwrite").parquet(f"{output_dir}/{name}")
+    return {
+        "decisions": written,
+        **{name: read_back(name, frame) for name, frame in derived.items()},
+    }

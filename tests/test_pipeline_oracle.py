@@ -158,3 +158,95 @@ def test_rule_hit_matrix_invariants(spark, transcripts_path):
     # overlap really exists in the fixture (otherwise the matrix adds
     # nothing over the metrics table and the test proves too little)
     assert any(r["shadowed"] > 0 for r in matrix.values())
+
+
+def _sql_store(spark):
+    """The SQL status store (with a converter for its Scala collections),
+    once the listener bus has delivered every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    return store, spark._jvm.scala.jdk.javaapi.CollectionConverters
+
+
+@pytest.fixture(scope="module")
+def written_run(spark, transcripts_path, tmp_path_factory) -> dict:
+    """One ``run_pipeline`` call with an output dir: the output dir, the
+    frames it returned and how many of its SQL executions ran a Python UDF
+    (a plan with an ``ArrowEvalPython`` node)."""
+    from open_thoughts_spark.pipeline import run_pipeline
+
+    store, conv = _sql_store(spark)
+    last = max((e.executionId() for e in conv.asJava(store.executionsList())), default=-1)
+    out = str(tmp_path_factory.mktemp("run_pipeline"))
+    frames = run_pipeline(spark, transcripts_path, output_dir=out, langid_mode="udf")
+    store, conv = _sql_store(spark)
+    udf_executions = sum(
+        any(
+            n.name() == "ArrowEvalPython"
+            for n in conv.asJava(store.planGraph(e.executionId()).allNodes())
+        )
+        for e in conv.asJava(store.executionsList())
+        if e.executionId() > last
+    )
+    return {"out": out, "frames": frames, "udf_executions": udf_executions}
+
+
+def _rows(df: pd.DataFrame, key: list[str]) -> pd.DataFrame:
+    return df.sort_values(key).reset_index(drop=True)
+
+
+def test_run_pipeline_writes_lazy_tables_in_one_cascade_pass(
+    spark, transcripts_path, written_run
+):
+    """The five written tables equal the lazy definitions over the same
+    input — lineage's partition_id included — and the cascade's Python
+    UDFs run in exactly one SQL execution of the call (the decisions
+    write); every other table is derived from the written decisions."""
+    from open_thoughts_spark.pipeline.metrics import partition_lineage, rule_hit_matrix
+    from open_thoughts_spark.pipeline.quality_filter import RESULT_COLUMNS
+
+    assert written_run["udf_executions"] == 1
+    out = written_run["out"]
+    decided = quality_filter(spark.read.parquet(transcripts_path), langid_mode="udf")
+    decisions = decided.select(*RESULT_COLUMNS).toPandas()
+    kept = decisions[decisions["keep"]].drop(columns=["keep", "drop_reason"])
+    want = {
+        "decisions": (decisions, KEY),
+        # the kept rows of the same decisions (not a re-scored frame: the
+        # perplexity kernel's last digits depend on the Arrow batch)
+        "filtered": (kept, KEY),
+        "metrics": (drop_reason_metrics(decided).toPandas(), ["reason"]),
+        "lineage": (partition_lineage(decided).toPandas(), ["partition_id"]),
+        "rule_matrix": (rule_hit_matrix(decided).toPandas(), ["rule"]),
+    }
+    for name, (expected, key) in want.items():
+        got = spark.read.parquet(f"{out}/{name}").toPandas()
+        assert list(got.columns) == list(expected.columns), name
+        pd.testing.assert_frame_equal(
+            _rows(got, key), _rows(expected, key), check_dtype=False, obj=name
+        )
+        # the returned frames read the written tables
+        returned = written_run["frames"][name].toPandas()
+        pd.testing.assert_frame_equal(_rows(returned, key), _rows(got, key), obj=name)
+
+
+def test_lineage_agrees_with_written_files(spark, transcripts_path, written_run):
+    """lineage rows_in per partition_id is the row count of decisions file
+    part-<partition_id>; rows_in and rows_kept sum to the input turns and
+    the filtered rows."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = written_run["out"]
+    lineage = spark.read.parquet(f"{out}/lineage").toPandas()
+    files: dict[int, int] = {}
+    for f in glob.glob(f"{out}/decisions/part-*.parquet"):
+        part = int(os.path.basename(f).split("-")[1])
+        files[part] = files.get(part, 0) + pq.ParquetFile(f).metadata.num_rows
+    assert len(files) > 1  # several partitions, or the mapping proves nothing
+    assert dict(zip(lineage["partition_id"], lineage["rows_in"])) == files
+    assert lineage["rows_in"].sum() == spark.read.parquet(transcripts_path).count()
+    assert lineage["rows_kept"].sum() == spark.read.parquet(f"{out}/filtered").count()
+    assert (lineage["rows_dropped"] == lineage["rows_in"] - lineage["rows_kept"]).all()
